@@ -557,8 +557,10 @@ def pipeline_bloom_decontaminate(spark, sf_dir):
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # one lazy plan, no driver-side counts: four 1-row aggregates cross
-    return (
+    # one plan, no driver-side counts: four 1-row aggregates cross. The
+    # 1-row result is pinned so the corpus-sized gram cache can be
+    # released before returning (as stage5_decontam does).
+    out = (
         cand.agg(F.countDistinct("doc_id").alias("n_docs"))
         .crossJoin(flagged.agg(F.count(F.lit(1)).alias("n_flagged")))
         .crossJoin(exact.agg(F.count(F.lit(1)).alias("n_exact")))
@@ -576,7 +578,10 @@ def pipeline_bloom_decontaminate(spark, sf_dir):
                 "false_positive_docs"
             ),
         )
+        .localCheckpoint(eager=True)
     )
+    grams.unpersist()
+    return out
 
 
 # ---------------------------------------------------------------------------

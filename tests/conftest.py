@@ -4,6 +4,7 @@ compare (row count + schema shape + order-insensitive values)."""
 
 from __future__ import annotations
 
+import contextlib
 import math
 import os
 import sys
@@ -24,6 +25,19 @@ def spark():
     s = get_spark("cdc-poc-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     yield s
     s.stop()
+
+
+@contextlib.contextmanager
+def broadcast_disabled(spark):
+    """Run the block with spark.sql.autoBroadcastJoinThreshold=-1 (the
+    shuffle-join plans larger inputs take), restoring the session's
+    value afterwards."""
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 @pytest.fixture(scope="session")

@@ -179,3 +179,16 @@ def test_contains_probes_overlapping_nested(spark):
             ).collect()
         }
         assert out == {1: 3}, (method, out)
+
+
+def test_bloom_decontaminate_releases_its_gram_cache(spark):
+    """pipeline_bloom_decontaminate persists the corpus-sized gram
+    relation for its four consumers; once the query's result has been
+    collected, the session's CacheManager must be empty again."""
+    from cdc_poc_spark.queries import all_specs
+
+    from .conftest import SF_DIR
+
+    spark.catalog.clearCache()
+    all_specs()["pipeline_bloom_decontaminate"].fn(spark, SF_DIR).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

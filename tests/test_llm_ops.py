@@ -9,7 +9,7 @@ import pytest
 from cdc_poc_spark.operators import dedup, multimodal, similarity
 from cdc_poc_spark.tables import load_table
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, broadcast_disabled
 
 
 @pytest.fixture(scope="module")
@@ -766,7 +766,9 @@ def test_pagerank_k5_matches_reference_and_bucketed(spark, tmp_path):
     runs with per-round pins (no lineage blowup) and matches a
     driver-side integer reference bit-for-bit; (b) the bucketed
     edge-table path and the reliable-checkpoint path return identical
-    rows; (c) checkpoint files land in the given dir."""
+    rows; (c) checkpoint files land in the given dir; (d) with
+    broadcasts disabled (the shuffle-join branch larger graphs take)
+    the ranks are the same."""
     import os
     import random
 
@@ -779,6 +781,9 @@ def test_pagerank_k5_matches_reference_and_bucketed(spark, tmp_path):
 
     got = {r.node: r.rank_micro for r in pagerank(df, n_iters=5).collect()}
     assert got == expect
+    with broadcast_disabled(spark):
+        got_shuffled = {r.node: r.rank_micro for r in pagerank(df, n_iters=5).collect()}
+    assert got_shuffled == expect
 
     ckpt = str(tmp_path / "pr_ckpt")
     got_ck = {

@@ -19,10 +19,11 @@ ROWS_ONLY = sorted(n for n, s in SPECS.items() if not s.oracle)
 
 # Default-tier parity sample (see pytest.ini): a deterministic ~1/6 of
 # the registry (crc32 of the name — stable across runs and machines,
-# unlike salted hash()) plus every CORE bench query, MINUS the
-# known-heavy parity params (>= 9 s each measured r14; they and the
-# rest of the registry run in the full suite, and the committed
-# PARITY_SWEEP.json covers all 506 at every round close).
+# unlike salted hash()) MINUS the known-heavy parity params (>= 9 s
+# each measured r14; they and the rest of the registry run in the full
+# suite, and the committed PARITY_SWEEP.json covers all 506 at every
+# round close), plus every CORE bench query and every _TOUCHED query —
+# those two sets win over the heavy list.
 _CORE = {
     "q1_pricing_summary", "q3_shipping_priority", "q13_customer_distribution",
     "cdc_current_state_by_segment", "win_top3_orders_per_customer",
@@ -47,10 +48,19 @@ _HEAVY_PARITY = {
 }
 
 
+# Queries whose code (or the operators they call) the latest change
+# touched: the default tier covers them whatever their crc sample.
+_TOUCHED = {
+    "graph_pagerank_3iter", "graph_label_propagation",
+    "graph_modularity_labelprop", "graph_kcore_profile",
+    "graph_bfs_distances", "pipeline_bloom_decontaminate",
+}
+
+
 def _in_default_tier(name: str) -> bool:
-    if name in _HEAVY_PARITY:
-        return False
-    return name in _CORE or zlib.crc32(name.encode()) % 6 == 0
+    if name in _CORE or name in _TOUCHED:
+        return True
+    return name not in _HEAVY_PARITY and zlib.crc32(name.encode()) % 6 == 0
 
 
 @pytest.mark.parametrize(

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from cdc_poc_spark.operators import scale
 from cdc_poc_spark.tables import load_table
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, broadcast_disabled
 
 
 def _plan(df) -> str:
@@ -341,15 +341,81 @@ def test_global_cumsum_matches_window(spark):
 
 def test_min_label_propagation_fixpoint_is_components(spark):
     """Run past the graph diameter, min-label propagation IS connected
-    components (every node labeled with its component's min id)."""
+    components (every node labeled with its component's min id) — with
+    the label relation broadcast and, with broadcasts disabled, through
+    the shuffle joins larger graphs take."""
     from cdc_poc_spark.operators.graph import min_label_propagation
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)],
         "u long, v long",
     )
+    want = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
     out = {r.node: r.lbl for r in min_label_propagation(edges, n_iters=4).collect()}
-    assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+    assert out == want
+    with broadcast_disabled(spark):
+        out = {r.node: r.lbl for r in min_label_propagation(edges, n_iters=4).collect()}
+    assert out == want
+
+
+def _shuffle_records_written(spark, run) -> int:
+    """Shuffle records written by the stages ``run()`` launches, read from
+    the driver's status store (stages newer than the latest one before
+    the call; the listener bus is drained first so every finished stage
+    is counted)."""
+    sc = spark.sparkContext
+    jvm, store = sc._jvm, sc._jsc.sc().statusStore()
+
+    def stages():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        seq = store.stageList(
+            jvm.java.util.ArrayList(), False, False,
+            sc._gateway.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
+        )
+        return list(jvm.scala.jdk.javaapi.CollectionConverters.asJava(seq))
+
+    before = max((s.stageId() for s in stages()), default=-1)
+    run()
+    return sum(s.shuffleWriteRecords() for s in stages() if s.stageId() > before)
+
+
+def test_graph_rounds_never_reshuffle_the_edge_list(spark):
+    """With the node-keyed relation broadcast, a pagerank or label-
+    propagation round shuffles only its map-side-combined keyed
+    aggregate (<= |V| rows per input partition), never the edge list:
+    over ALL rounds together the shuffle writes fewer records than one
+    copy of the symmetric edge list. With broadcasts disabled the same
+    calls shuffle the edge list in their round joins, which shows the
+    probe sees it."""
+    import random
+
+    from cdc_poc_spark.operators.graph import min_label_propagation, pagerank
+
+    n_nodes, n_edges, n_iters = 100, 2000, 5  # |E| = 20·|V|
+    rng = random.Random(5)
+    edges = set()
+    while len(edges) < n_edges:
+        a, b = rng.randrange(n_nodes), rng.randrange(n_nodes)
+        if a != b:
+            edges.add((min(a, b), max(a, b)))
+    # two input partitions, so the symmetric relation has four: its
+    # n_iters + 1 map-side-combined aggregates write at most
+    # 6 · 4 · |V| = 2,400 records, under |sym| = 4,000
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(sorted(edges), 2), "u long, v long"
+    )
+    n_sym = 2 * n_edges
+
+    def run_pagerank():
+        pagerank(df, n_iters=n_iters).collect()
+
+    def run_labels():
+        min_label_propagation(df, n_iters=n_iters).collect()
+
+    for run in (run_pagerank, run_labels):
+        assert _shuffle_records_written(spark, run) < n_sym, run.__name__
+        with broadcast_disabled(spark):
+            assert _shuffle_records_written(spark, run) > n_sym, run.__name__
 
 
 def test_kcore_peel_matches_python_reference(spark):
@@ -390,6 +456,12 @@ def test_kcore_peel_matches_python_reference(spark):
         for r in kcore_peel(df, k=k, n_rounds=rounds).orderBy("round").collect()
     ]
     assert got == expect
+    with broadcast_disabled(spark):
+        got_shuffled = [
+            (r.n_nodes, r.n_edges_x2)
+            for r in kcore_peel(df, k=k, n_rounds=rounds).orderBy("round").collect()
+        ]
+    assert got_shuffled == expect
     assert all(got[i] >= got[i + 1] for i in range(len(got) - 1))
 
 
@@ -412,4 +484,7 @@ def test_min_label_propagation_matches_python_reference(spark):
         lbl = {n: min([lbl[n]] + [lbl[m] for m in adj[n]]) for n in adj}
     df = spark.createDataFrame(edges, "u long, v long")
     got = {r.node: r.lbl for r in min_label_propagation(df, n_iters=3).collect()}
+    assert got == lbl
+    with broadcast_disabled(spark):
+        got = {r.node: r.lbl for r in min_label_propagation(df, n_iters=3).collect()}
     assert got == lbl

@@ -52,17 +52,22 @@ def _helpers_salt() -> str:
     the query function's own source let helper edits silently skip
     re-audit, the same staleness class VERDICT r8 #1 flagged, one
     level down. A helper edit therefore costs a full re-run; cheap
-    false positives beat silent staleness."""
+    false positives beat silent staleness.
+
+    Paths are hashed repo-relative (POSIX separators) and directories
+    are walked in sorted order, so the salt depends only on the tree's
+    contents, not on where it is checked out or on filesystem order."""
     pkg = os.path.join(REPO, "cdc_poc_spark")
     h = hashlib.md5()
     for root, dirs, files in os.walk(pkg):
         if os.path.basename(root) == "queries" or "__pycache__" in root:
             dirs[:] = []
             continue
+        dirs.sort()
         for f in sorted(files):
             if f.endswith(".py"):
                 p = os.path.join(root, f)
-                h.update(p.encode())
+                h.update(os.path.relpath(p, REPO).replace(os.sep, "/").encode())
                 with open(p, "rb") as fh:
                     h.update(fh.read())
     return h.hexdigest()[:8]
