@@ -103,10 +103,46 @@ def merge_into_parquet(
     # so land the new state beside the target and rename — distributed
     # write, no driver materialization.
     tmp = target_path.rstrip("/") + ".__tmp__"
-    merged.write.mode("overwrite").parquet(tmp)
+    merged.write.mode("overwrite").option("compression", "zstd").parquet(tmp)
     if os.path.exists(target_path):
         shutil.rmtree(target_path)
     os.rename(tmp, target_path)
+
+
+_LEAF_DIR = "__bucket="
+
+
+def _leaf_layout(target_path: str, n_buckets: int) -> dict[int, int]:
+    """Leaf id -> depth for every ``__bucket=`` directory of a target,
+    checked: an id must decode to a (depth, residue) of the
+    ``n_buckets`` tree and no leaf may contain another."""
+    top = n_buckets.bit_length() - 1
+    leaves: dict[int, int] = {}
+    for entry in os.listdir(target_path):
+        if not entry.startswith(_LEAF_DIR):
+            continue
+        b = int(entry[len(_LEAF_DIR):])
+        depth, r = top - b // n_buckets, b % n_buckets
+        if depth < 0 or r >> depth:
+            raise ValueError(f"{entry} is not a leaf of a {n_buckets}-bucket layout")
+        leaves[b] = depth
+    residues = {(d, b % n_buckets) for b, d in leaves.items()}
+    for d, r in residues:
+        for a in range(d):
+            if (a, r & ((1 << a) - 1)) in residues:
+                raise ValueError(
+                    f"overlapping leaves in {target_path}: depth {a} residue "
+                    f"{r & ((1 << a) - 1)} contains depth {d} residue {r}"
+                )
+    return leaves
+
+
+def _dir_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path)
+        if not f.startswith((".", "_"))
+    )
 
 
 def merge_into_parquet_bucketed(
@@ -119,64 +155,118 @@ def merge_into_parquet_bucketed(
     delete_ops: tuple[str, ...] = ("d", "D"),
     n_buckets: int = 64,
 ) -> None:
-    """Partition-pruned merge: the target is laid out as
-    ``__bucket=pmod(xxhash64(keys), n_buckets)`` partition directories,
-    and a batch only rewrites the buckets its keys hash into.
+    """Partition-pruned merge into a tree of hash leaves that split when
+    they are rewritten.
 
-    Cost per batch is O(touched_buckets / n_buckets × state) instead of
-    ``merge_into_parquet``'s O(state) — the same file-pruning idea a
-    MERGE INTO on a transactional format applies, built from plain
-    parquet + dynamic partition overwrite. At 100 TB with n_buckets
-    sized so a bucket ≈ a few GB, a small CDC batch touches a handful
-    of directories and the merge is effectively O(batch).
+    With h = xxhash64 of the keys, a leaf at depth d holds the keys
+    whose h has low-d-bit residue r and lives in the partition directory
+    ``__bucket = r + n_buckets * (log2(n_buckets) - d)``. A new mirror
+    is one root leaf; the deepest level (d = log2(n_buckets)) is the
+    fixed ``pmod(h, n_buckets)`` layout, so a mirror written that way is
+    the fully split tree. ``n_buckets`` must be a power of two and caps
+    the fan-out.
+
+    Each batch row goes to the leaf that contains its h; a key in a
+    hole left by a fully deleted leaf goes to its deepest-level leaf,
+    which cannot overlap another. Only the touched leaves are read and
+    rewritten, and a touched leaf whose directory holds more than one
+    scan split (``spark.sql.files.maxPartitionBytes``) is rewritten
+    directly as its 2^k descendants, k = ceil(log2(bytes / split)),
+    capped at the deepest level — splitting costs no I/O beyond the
+    rewrite. Leaves thus stay about one split in size: a small mirror
+    is a single file per merge, and a large one rewrites only the
+    split-sized leaves its keys hash into. A 100 TB mirror needs
+    n_buckets near 100 TB / split (2^20 at 128 MB) for that; a large
+    cap costs a small mirror nothing.
+
+    The merged leaves are written aside, then swapped in; a replaced
+    leaf is deleted only after its children are in place, and a layout
+    with overlapping leaves (a swap cut short) raises.
     """
+    if n_buckets < 1 or n_buckets & (n_buckets - 1):
+        raise ValueError(f"n_buckets must be a power of two, got {n_buckets}")
+    import shutil
+
+    top = n_buckets.bit_length() - 1
     # Hash a type-STABLE representation of the key: xxhash64(int 2) !=
     # xxhash64(bigint 2), so schema evolution that widens a key type
-    # would silently re-route existing keys to different buckets and
-    # duplicate state. Casting to string first makes the bucket a
+    # would silently re-route existing keys to different leaves and
+    # duplicate state. Casting to string first makes the leaf a
     # function of the key's value, not its physical type.
-    bucket = F.pmod(
-        F.xxhash64(*[F.col(c).cast("string") for c in key_cols]), F.lit(n_buckets)
-    )
-    batch_b = batch_df.withColumn("__bucket", bucket)
+    h = F.xxhash64(*[F.col(c).cast("string") for c in key_cols])
+
+    def leaf_at(depth: int):
+        return h.bitwiseAND(F.lit((1 << depth) - 1)) + F.lit(n_buckets * (top - depth))
+
     exists = os.path.exists(target_path)
-    if exists:
-        touched = [r["__bucket"] for r in batch_b.select("__bucket").distinct().collect()]
-        state = spark.read.parquet(target_path).filter(F.col("__bucket").isin(touched))
+    leaves = _leaf_layout(target_path, n_buckets) if exists else {}
+    if not leaves:
+        leaves = {n_buckets * top: 0}
+    depths = sorted(set(leaves.values()))
+    route = F.coalesce(
+        *[
+            F.when(leaf_at(d).isin([b for b, bd in leaves.items() if bd == d]), leaf_at(d))
+            for d in depths
+        ],
+        leaf_at(top),
+    )
+    batch_b = batch_df.withColumn("__bucket", route)
+    touched = [r["__bucket"] for r in batch_b.select("__bucket").distinct().collect()]
+    present = [b for b in touched if os.path.isdir(os.path.join(target_path, f"{_LEAF_DIR}{b}"))]
+    if present:
+        state = spark.read.option("basePath", target_path).parquet(
+            *[os.path.join(target_path, f"{_LEAF_DIR}{b}") for b in present]
+        )
         if op_col not in state.columns:
             state = state.withColumn(op_col, F.lit("u"))
         combined = state.unionByName(batch_b, allowMissingColumns=True)
     else:
         combined = batch_b
     merged = apply_changes(combined, key_cols, seq_col, op_col, delete_ops)
+
+    # a leaf of `size` bytes splits ceil(log2(size / split)) levels down
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    grown: dict[int, list[int]] = {}
+    for b in present:
+        size = _dir_bytes(os.path.join(target_path, f"{_LEAF_DIR}{b}"))
+        d = min(top, leaves[b] + ((size - 1) // split).bit_length())
+        if d > leaves[b]:
+            grown.setdefault(d, []).append(b)
+    out_leaf = F.col("__bucket")
+    for d, olds in grown.items():
+        out_leaf = F.when(F.col("__bucket").isin(olds), leaf_at(d)).otherwise(out_leaf)
+    merged = merged.withColumn("__bucket", out_leaf)
+
     # Self-overwrite hazard: the merged plan reads the very files being
     # replaced. Write-aside distributed, then swap ONLY the touched
-    # bucket directories (driver does metadata renames, never data; on
+    # leaf directories (driver does metadata renames, never data; on
     # an object store this is the commit protocol's job / a transactional
     # format's snapshot swap).
-    import shutil
-
     tmp = target_path.rstrip("/") + ".__tmp__"
-    merged.write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
+    (
+        merged.write.mode("overwrite")
+        .option("compression", "zstd")
+        .partitionBy("__bucket")
+        .parquet(tmp)
+    )
     if not exists:
         os.rename(tmp, target_path)
         return
     moved = set()
     for entry in os.listdir(tmp):
-        if not entry.startswith("__bucket="):
+        if not entry.startswith(_LEAF_DIR):
             continue
         dst = os.path.join(target_path, entry)
         if os.path.exists(dst):
             shutil.rmtree(dst)
         os.rename(os.path.join(tmp, entry), dst)
         moved.add(entry)
-    # a touched bucket with NO merged output means every key in it was
-    # deleted — drop the stale directory
-    for b in touched:
-        entry = f"__bucket={b}"
-        stale = os.path.join(target_path, entry)
-        if entry not in moved and os.path.exists(stale):
-            shutil.rmtree(stale)
+    # only now, with every child in place: drop each touched leaf that
+    # split or whose keys were all deleted
+    for b in present:
+        entry = f"{_LEAF_DIR}{b}"
+        if entry not in moved:
+            shutil.rmtree(os.path.join(target_path, entry))
     shutil.rmtree(tmp)
 
 

@@ -1908,10 +1908,11 @@ def cdc_mirror_merge_replay(spark, sf_dir):
     diffed against the one-shot window-dedup of the whole log, and
     the DIFF COUNT is part of the value hash (oracle says 0).
 
-    Scale: the merge rewrites only touched buckets (O(batch), the
-    MERGE file-pruning idea in plain parquet); trajectory rows are
-    bounded aggregates; replay is idempotent because state rows keep
-    their seq (a re-delivered batch cannot regress newer state)."""
+    Scale: the merge rewrites only the hash leaves its keys fall in,
+    each kept near one scan split (the MERGE file-pruning idea in plain
+    parquet); trajectory rows are bounded aggregates; replay is
+    idempotent because state rows keep their seq (a re-delivered batch
+    cannot regress newer state)."""
     import glob as _glob
     import os
     import shutil
@@ -2015,7 +2016,7 @@ def cdc_mirror_merge_replay(spark, sf_dir):
 
     def _has_state(path: str) -> bool:
         # the manual DELETE FROM empties the account mirror: every
-        # touched bucket directory is dropped, leaving a data-less
+        # touched leaf directory is dropped, leaving a data-less
         # target that parquet cannot infer a schema from
         return os.path.exists(path) and any(
             e.startswith("__bucket=") for e in os.listdir(path)

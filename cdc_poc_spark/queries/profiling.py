@@ -881,28 +881,32 @@ def _coorder_part_edges(spark, sf_dir):
     )
     # The count shuffle carries ONE packed long per pair instead of a
     # two-long struct row (optimization r14, guide §2.3 "narrower
-    # types"): u*2^32 + v is injective while part keys stay below 2^32
-    # (TPC-H part keys reach 200k x SF — five orders of magnitude of
-    # headroom at the 100 TB point), and u < v survives the decode
-    # unchanged. Same pair multiset, same counts.
+    # types"): u*2^32 + v is injective, overflow-free and keeps u < v
+    # while 0 <= part key < 2^31. TPC-H part keys reach 200k x SF, so
+    # that bound breaks near SF 10.7k (about 10 TB), a decade below the
+    # 100 TB point (SF 100k, keys up to 2e10); the bound is checked
+    # here and the struct key taken beyond it. Same pair multiset, same
+    # counts either way.
+    lo, hi = li.agg(F.min("l_partkey"), F.max("l_partkey")).first()
+    packed = lo is None or (lo >= 0 and hi < 1 << 31)
+    pair = "x * 4294967296L + y" if packed else "named_struct('u', x, 'v', y)"
     pairs = ps.select(
         F.explode(
             F.expr(
                 "flatten(transform(ps, (x, i) ->"
-                " transform(slice(ps, i + 2, size(ps)),"
-                " y -> x * 4294967296L + y)))"
+                f" transform(slice(ps, i + 2, size(ps)), y -> {pair})))"
             )
         ).alias("uv")
     )
+    if packed:
+        u, v = F.shiftrightunsigned("uv", 32), F.col("uv").bitwiseAND(F.lit((1 << 32) - 1))
+    else:
+        u, v = F.col("uv.u").cast("long"), F.col("uv.v").cast("long")
     return (
         pairs.groupBy("uv")
         .agg(F.count(F.lit(1)).alias("w"))
         .filter(F.col("w") >= _COORDER_MIN_SHARED)
-        .select(
-            F.shiftright("uv", 32).alias("u"),
-            F.col("uv").bitwiseAND(F.lit((1 << 32) - 1)).alias("v"),
-            "w",
-        )
+        .select(u.alias("u"), v.alias("v"), "w")
         .localCheckpoint(eager=True)
     )
 

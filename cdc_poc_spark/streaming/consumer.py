@@ -51,12 +51,17 @@ class CDCConsumer:
     checkpoint_dir: str
     #: mirror mode needs per-table specs; log mode needs none
     tables: dict[str, TableSpec] = field(default_factory=dict)
-    #: >0 switches the mirror merge to the bucketed partition-pruned
-    #: path (cdc_apply.merge_into_parquet_bucketed): per-batch cost
-    #: O(touched buckets), not O(state) — the setting for large mirrors.
-    #: Default 64: a small CDC batch rewrites only its touched buckets
-    #: (O(batch)), never the whole mirror — the production setting;
-    #: 0 opts into the single-directory full-rewrite path for tiny state.
+    #: >0 switches the mirror merge to the leaf-pruned path
+    #: (cdc_apply.merge_into_parquet_bucketed) and caps its fan-out; a
+    #: power of two. A mirror starts as one hash leaf, and a merge
+    #: rewrites only the leaves its keys hash into, splitting any that
+    #: outgrew one scan split (spark.sql.files.maxPartitionBytes), so a
+    #: leaf stays about one split in size. A small mirror is therefore
+    #: one file per merge whatever the cap; at 64 a 100 TB mirror would
+    #: still rewrite ~1.5 TB per touched leaf, so large mirrors raise it
+    #: toward state / split (2^20 at 100 TB and 128 MB), which costs
+    #: small mirrors nothing. 0 opts into the single-directory
+    #: full-rewrite path.
     mirror_buckets: int = 64
     #: when set, unparseable records (null/malformed/op-less envelopes)
     #: are quarantined to this parquet dir instead of poisoning the

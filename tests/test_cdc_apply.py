@@ -6,7 +6,9 @@ deterministic asserts — replacing the reference's sleep-and-scrape e2e
 
 from __future__ import annotations
 
+import contextlib
 import json
+import os
 
 import pytest
 
@@ -219,52 +221,226 @@ def test_scd2_history(spark, typed_log):
     assert not emily[1].is_current
 
 
-def test_merge_into_parquet_bucketed(spark, tmp_path):
-    """Bucketed merge: correct state across batches, only touched bucket
-    dirs rewritten, all-deleted buckets removed."""
-    import os
+_MIRROR_SCHEMA = "pk LONG, val STRING, seq LONG, op STRING"
 
-    target = str(tmp_path / "state")
-    schema = "pk LONG, val STRING, seq LONG, op STRING"
-    b1 = spark.createDataFrame(
-        [(i, f"v{i}", i, "c") for i in range(20)], schema
-    )
-    cdc_apply.merge_into_parquet_bucketed(spark, target, b1, ["pk"], n_buckets=8)
-    got = {(r.pk, r.val) for r in cdc_apply.read_bucketed_state(spark, target).collect()}
-    assert got == {(i, f"v{i}") for i in range(20)}
 
-    dirs_before = {
-        d: os.path.getmtime(os.path.join(target, d)) for d in os.listdir(target)
-    }
-    # batch 2 touches exactly one key -> at most one bucket rewritten
-    b2 = spark.createDataFrame([(3, "v3b", 100, "u")], schema)
-    cdc_apply.merge_into_parquet_bucketed(spark, target, b2, ["pk"], n_buckets=8)
-    got = {(r.pk, r.val) for r in cdc_apply.read_bucketed_state(spark, target).collect()}
-    assert (3, "v3b") in got and len(got) == 20
-    changed = [
-        d
+@contextlib.contextmanager
+def _split_bytes(spark, n):
+    """Run the block with spark.sql.files.maxPartitionBytes=n."""
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def _leaf_files(target):
+    """Leaf directory -> its data file names."""
+    return {
+        d: frozenset(f for f in os.listdir(os.path.join(target, d)) if f.endswith(".parquet"))
         for d in os.listdir(target)
         if d.startswith("__bucket=")
-        and os.path.getmtime(os.path.join(target, d)) != dirs_before.get(d)
-    ]
-    assert len(changed) == 1, changed
+    }
 
-    # batch 3 deletes every key of one bucket -> its directory disappears
-    bucket_of_3 = changed[0]
-    same_bucket_keys = [
-        r.pk
-        for r in cdc_apply.read_bucketed_state(spark, target)
-        .withColumn("b", F.expr("pmod(xxhash64(cast(pk as string)), 8)"))
-        .filter(F.expr(f"b = {bucket_of_3.split('=')[1]}"))
+
+def _check_layout(spark, target, n_buckets=64):
+    """Assert the leaf invariants and return {leaf id: depth}: every id
+    decodes to a (depth, residue), no leaf contains another, and each
+    row's key hash has its leaf's residue in the low depth bits."""
+    top = n_buckets.bit_length() - 1
+    leaves = {}
+    for d in _leaf_files(target):
+        b = int(d.split("=")[1])
+        depth, r = top - b // n_buckets, b % n_buckets
+        assert 0 <= depth <= top and r < (1 << depth), d
+        leaves[b] = (depth, r)
+    for b1, (d1, r1) in leaves.items():
+        for b2, (d2, r2) in leaves.items():
+            assert b1 == b2 or d1 >= d2 or r2 & ((1 << d1) - 1) != r1, (b1, b2)
+    rows = (
+        spark.read.parquet(target)
+        .select("__bucket", F.expr("xxhash64(cast(pk AS STRING))").alias("h"))
         .collect()
-    ]
-    b3 = spark.createDataFrame(
-        [(pk, None, 200 + pk, "d") for pk in same_bucket_keys], schema
     )
-    cdc_apply.merge_into_parquet_bucketed(spark, target, b3, ["pk"], n_buckets=8)
-    assert not os.path.exists(os.path.join(target, bucket_of_3))
-    got = {r.pk for r in cdc_apply.read_bucketed_state(spark, target).collect()}
-    assert got == set(range(20)) - set(same_bucket_keys)
+    for row in rows:
+        depth, r = leaves[row["__bucket"]]
+        assert row["h"] & ((1 << depth) - 1) == r, row
+    return {b: d for b, (d, _) in leaves.items()}
+
+
+def _state(spark, target):
+    """Mirror rows as a sorted list, so a key landed twice shows."""
+    return sorted(tuple(r) for r in cdc_apply.read_bucketed_state(spark, target)
+                  .select("pk", "val", "seq", "op").collect())
+
+
+def _expected(spark, rows):
+    log = spark.createDataFrame(rows, _MIRROR_SCHEMA)
+    return sorted(tuple(r) for r in cdc_apply.apply_changes(log, ["pk"])
+                  .select("pk", "val", "seq", "op").collect())
+
+
+def test_bucketed_merge_fresh_mirror_is_one_leaf(spark, tmp_path):
+    target = str(tmp_path / "state")
+    rows = [(i, f"v{i}", i, "c") for i in range(20)]
+    cdc_apply.merge_into_parquet_bucketed(
+        spark, target, spark.createDataFrame(rows, _MIRROR_SCHEMA), ["pk"]
+    )
+    # the root leaf of a 64-bucket tree: residue 0 at depth 0 = 0 + 64 * 6
+    assert _check_layout(spark, target) == {384: 0}
+    assert _state(spark, target) == _expected(spark, rows)
+
+
+def _epochs():
+    """3,000 inserts, then five epochs of 300 upserts over 5,000 keys,
+    20% of them deletes."""
+    import random
+
+    rng = random.Random(7)
+    log = [(i, f"v{i}", i, "c") for i in range(3000)]
+    seq = len(log)
+    batches = [log]
+    for _ in range(5):
+        batch = []
+        for pk in rng.sample(range(5000), 300):
+            seq += 1
+            deleted = rng.random() < 0.2
+            batch.append((pk, None if deleted else f"w{seq}", seq, "d" if deleted else "u"))
+        batches.append(batch)
+    return batches
+
+
+def test_merge_into_parquet_bucketed(spark, tmp_path):
+    """Six epochs with 4 KB scan splits: the root leaf splits on its
+    first rewrite, the leaf invariants hold, and the state equals a
+    one-shot apply_changes of the whole log after every epoch."""
+    target = str(tmp_path / "state")
+    log = []
+    n_leaves = []
+    with _split_bytes(spark, 4096):
+        for batch in _epochs():
+            cdc_apply.merge_into_parquet_bucketed(
+                spark, target, spark.createDataFrame(batch, _MIRROR_SCHEMA), ["pk"]
+            )
+            log += batch
+            leaves = _check_layout(spark, target)
+            n_leaves.append(len(leaves))
+            assert _state(spark, target) == _expected(spark, log)
+    assert n_leaves[0] == 1
+    assert n_leaves[1] > 1 and 0 not in leaves.values()
+    assert max(leaves.values()) < 6  # leaves stop splitting at one split
+
+
+def _split_target(spark, target):
+    """Merge the first two epochs with 4 KB scan splits, so the root
+    leaf has split; return their log."""
+    batches = _epochs()[:2]
+    with _split_bytes(spark, 4096):
+        for batch in batches:
+            cdc_apply.merge_into_parquet_bucketed(
+                spark, target, spark.createDataFrame(batch, _MIRROR_SCHEMA), ["pk"]
+            )
+    return batches[0] + batches[1]
+
+
+def test_bucketed_merge_one_key_rewrites_only_its_leaf(spark, tmp_path):
+    target = str(tmp_path / "state")
+    log = _split_target(spark, target)
+    leaves = _check_layout(spark, target)
+    assert len(leaves) > 1
+    before = _leaf_files(target)
+    batch = [(3, "v3b", 10_000, "u")]
+    cdc_apply.merge_into_parquet_bucketed(
+        spark, target, spark.createDataFrame(batch, _MIRROR_SCHEMA), ["pk"]
+    )
+    after = _leaf_files(target)
+    assert after.keys() == before.keys()
+    changed = [d for d in after if after[d] != before[d]]
+    assert len(changed) == 1, changed
+    (h,) = spark.range(1).select(F.expr("xxhash64(cast(3L AS STRING))")).first()
+    b = int(changed[0].split("=")[1])
+    assert h & ((1 << leaves[b]) - 1) == b % 64
+    assert _state(spark, target) == _expected(spark, log + batch)
+
+
+def test_bucketed_merge_drops_fully_deleted_leaf(spark, tmp_path):
+    """Deleting every key of a leaf removes its directory; a key later
+    inserted into that hole lands in a deepest-level leaf."""
+    target = str(tmp_path / "state")
+    log = _split_target(spark, target)
+    leaves = _check_layout(spark, target)
+    victim = min(leaves)
+    keys = [r.pk for r in spark.read.parquet(target).filter(f"__bucket = {victim}").collect()]
+    assert keys
+    before = _leaf_files(target)
+    deletes = [(pk, None, 20_000 + pk, "d") for pk in keys]
+    cdc_apply.merge_into_parquet_bucketed(
+        spark, target, spark.createDataFrame(deletes, _MIRROR_SCHEMA), ["pk"]
+    )
+    after = _leaf_files(target)
+    assert after == {d: f for d, f in before.items() if d != f"__bucket={victim}"}
+    log += deletes
+    assert _state(spark, target) == _expected(spark, log)
+
+    batch = [(keys[0], "back", 30_000, "c")]
+    cdc_apply.merge_into_parquet_bucketed(
+        spark, target, spark.createDataFrame(batch, _MIRROR_SCHEMA), ["pk"]
+    )
+    new = set(_check_layout(spark, target).items()) - set(leaves.items())
+    assert len(new) == 1 and next(iter(new))[1] == 6
+    assert _state(spark, target) == _expected(spark, log + batch)
+
+
+def test_bucketed_merge_continues_fixed_layout(spark, tmp_path):
+    """A mirror written in the fixed pmod(h, 64) layout is the fully
+    split tree: it keeps merging in place."""
+    target = str(tmp_path / "state")
+    rows = [(i, f"v{i}", i, "c") for i in range(500)]
+    (
+        spark.createDataFrame(rows, _MIRROR_SCHEMA)
+        .withColumn("__bucket", F.expr("pmod(xxhash64(cast(pk AS STRING)), 64)"))
+        .write.partitionBy("__bucket")
+        .parquet(target)
+    )
+    before = _leaf_files(target)
+    assert len(before) == 64
+    batch = (
+        [(i, f"u{i}", 1000 + i, "u") for i in range(0, 40, 2)]
+        + [(i, None, 2000 + i, "d") for i in range(1, 40, 2)]
+        + [(i, f"n{i}", 3000 + i, "c") for i in range(500, 520)]
+    )
+    cdc_apply.merge_into_parquet_bucketed(
+        spark, target, spark.createDataFrame(batch, _MIRROR_SCHEMA), ["pk"]
+    )
+    leaves = _check_layout(spark, target)
+    assert set(leaves.values()) == {6} and len(leaves) == 64
+    assert sum(_leaf_files(target)[d] == before[d] for d in before) > 0
+    assert _state(spark, target) == _expected(spark, rows + batch)
+
+
+def test_bucketed_merge_rejects_non_power_of_two(spark, tmp_path):
+    batch = spark.createDataFrame([(1, "a", 1, "c")], _MIRROR_SCHEMA)
+    with pytest.raises(ValueError, match="power of two"):
+        cdc_apply.merge_into_parquet_bucketed(
+            spark, str(tmp_path / "state"), batch, ["pk"], n_buckets=6
+        )
+
+
+def test_bucketed_merge_rejects_overlapping_leaves(spark, tmp_path):
+    """A root leaf next to one of its descendants (a swap cut short)
+    is refused rather than merged into duplicate state."""
+    target = str(tmp_path / "state")
+    (
+        spark.createDataFrame(
+            [(1, "a", 1, "c", 384), (2, "b", 2, "c", 5)], _MIRROR_SCHEMA + ", __bucket INT"
+        )
+        .write.partitionBy("__bucket")
+        .parquet(target)
+    )
+    batch = spark.createDataFrame([(3, "c", 3, "c")], _MIRROR_SCHEMA)
+    with pytest.raises(ValueError, match="overlapping leaves"):
+        cdc_apply.merge_into_parquet_bucketed(spark, target, batch, ["pk"])
 
 
 def test_merge_sql_statement_shape():

@@ -54,6 +54,17 @@ _TOUCHED = {
     "graph_pagerank_3iter", "graph_label_propagation",
     "graph_modularity_labelprop", "graph_kcore_profile",
     "graph_bfs_distances", "pipeline_bloom_decontaminate",
+    # the bucketed mirror merge (cdc.apply.merge_into_parquet_bucketed)
+    "cdc_mirror_merge_replay", "cdc_consumer_mirror_state",
+    # the co-order edge list (queries.profiling._coorder_part_edges)
+    "graph_local_clustering", "graph_linkpred_common_neighbors",
+    "graph_degree_assortativity", "graph_linkpred_adamic_adar",
+    "graph_boruvka_round", "graph_greedy_matching_round",
+    "graph_katz_centrality_2step", "graph_edge_embeddedness",
+    "graph_avg_neighbor_degree_curve", "graph_two_hop_reach",
+    "graph_rich_club_coefficient", "graph_diamond_census",
+    "graph_wcc_minlabel_3round", "graph_ktruss_peel_rounds",
+    "agg_morans_i",
 }
 
 

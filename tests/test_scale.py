@@ -488,3 +488,29 @@ def test_min_label_propagation_matches_python_reference(spark):
     with broadcast_disabled(spark):
         got = {r.node: r.lbl for r in min_label_propagation(df, n_iters=3).collect()}
     assert got == lbl
+
+
+@pytest.mark.parametrize("base", [0, -2, (1 << 31) - 3, 1 << 32])
+def test_coorder_pair_key_beyond_2_31(spark, tmp_path, base):
+    """The co-order edge list packs (u, v) into one long only while part
+    keys lie in [0, 2^31); keys at or past 2^31 (or negative) take the
+    struct key and still give the exact pair counts."""
+    import random
+    from collections import Counter
+
+    from cdc_poc_spark.queries.profiling import _COORDER_MIN_SHARED, _coorder_part_edges
+
+    rng = random.Random(5)
+    rows = [(o, base + rng.randrange(12)) for o in range(200) for _ in range(4)]
+    spark.createDataFrame(rows, "l_orderkey LONG, l_partkey LONG").write.parquet(
+        str(tmp_path / "lineitem.parquet")
+    )
+    parts: dict[int, set[int]] = {}
+    for o, p in rows:
+        parts.setdefault(o, set()).add(p)
+    w = Counter(
+        (a, b) for ps in parts.values() for a in ps for b in ps if a < b
+    )
+    want = {(a, b, c) for (a, b), c in w.items() if c >= _COORDER_MIN_SHARED}
+    got = {tuple(r) for r in _coorder_part_edges(spark, str(tmp_path)).collect()}
+    assert want and got == want

@@ -108,8 +108,8 @@ def test_mirror_mode_merges_current_state(spark, envelope_dir, tmp_path):
     assert acct == {(2, "bob@example.com"), (3, "carol2@example.com")}
     prod = {r.product_name for r in c.read_mirror(spark, "commerce_product").collect()}
     assert prod == {"Live Edge Dining Table", "Simple Teak Dining Chair"}
-    # the default mirror path is the bucketed partition-pruned merge
-    # (O(touched buckets) per batch, the 100 TB setting), not full rewrite
+    # the default mirror path is the leaf-pruned merge (only the hash
+    # leaves a batch touches are rewritten), not full rewrite
     assert CDCConsumer.mirror_buckets > 0
     import os
     assert any(
