@@ -112,12 +112,11 @@ def merge_into_parquet(
 _LEAF_DIR = "__bucket="
 
 
-def _leaf_layout(target_path: str, n_buckets: int) -> dict[int, int]:
-    """Leaf id -> depth for every ``__bucket=`` directory of a target,
-    checked: an id must decode to a (depth, residue) of the
-    ``n_buckets`` tree and no leaf may contain another."""
+def _leaf_layout(target_path: str, n_buckets: int) -> dict[int, tuple[int, int]]:
+    """Leaf id -> (depth, residue) for every ``__bucket=`` directory of
+    a target; an id that is no node of the ``n_buckets`` tree raises."""
     top = n_buckets.bit_length() - 1
-    leaves: dict[int, int] = {}
+    leaves: dict[int, tuple[int, int]] = {}
     for entry in os.listdir(target_path):
         if not entry.startswith(_LEAF_DIR):
             continue
@@ -125,16 +124,18 @@ def _leaf_layout(target_path: str, n_buckets: int) -> dict[int, int]:
         depth, r = top - b // n_buckets, b % n_buckets
         if depth < 0 or r >> depth:
             raise ValueError(f"{entry} is not a leaf of a {n_buckets}-bucket layout")
-        leaves[b] = depth
-    residues = {(d, b % n_buckets) for b, d in leaves.items()}
-    for d, r in residues:
-        for a in range(d):
-            if (a, r & ((1 << a) - 1)) in residues:
-                raise ValueError(
-                    f"overlapping leaves in {target_path}: depth {a} residue "
-                    f"{r & ((1 << a) - 1)} contains depth {d} residue {r}"
-                )
+        leaves[b] = (depth, r)
     return leaves
+
+
+def _ancestors(node: tuple[int, int]) -> list[tuple[int, int]]:
+    """The (depth, residue) nodes above ``node``, root first."""
+    d, r = node
+    return [(a, r & ((1 << a) - 1)) for a in range(d)]
+
+
+def _contains(outer: tuple[int, int], node: tuple[int, int]) -> bool:
+    return node[0] >= outer[0] and node[1] & ((1 << outer[0]) - 1) == outer[1]
 
 
 def _dir_bytes(path: str) -> int:
@@ -143,6 +144,24 @@ def _dir_bytes(path: str) -> int:
         for f in os.listdir(path)
         if not f.startswith((".", "_"))
     )
+
+
+def _rewrite_depth(
+    size: int, fine: set[int], depth: int, top: int, split: int, open_cost: int
+) -> int:
+    """Depth to rewrite a subtree at: ``size`` bytes rooted at
+    ``depth``, whose batch keys have the depth-``top`` residues
+    ``fine``. Leaves hold about one split at most; above that bound the
+    depth is the one at which a like batch would cost least next time,
+    its bytes rewritten plus ``open_cost`` per file (ties: fewer
+    leaves)."""
+    lo = min(top, depth + (max(size - 1, 0) // split).bit_length())
+
+    def cost(d: int) -> float:
+        t = len({r & ((1 << d) - 1) for r in fine})
+        return t * (size / (1 << (d - depth)) + open_cost)
+
+    return min(range(lo, top + 1), key=cost)
 
 
 def merge_into_parquet_bucketed(
@@ -155,8 +174,8 @@ def merge_into_parquet_bucketed(
     delete_ops: tuple[str, ...] = ("d", "D"),
     n_buckets: int = 64,
 ) -> None:
-    """Partition-pruned merge into a tree of hash leaves that split when
-    they are rewritten.
+    """Partition-pruned merge into a tree of hash leaves that split and
+    join when they are rewritten.
 
     With h = xxhash64 of the keys, a leaf at depth d holds the keys
     whose h has low-d-bit residue r and lives in the partition directory
@@ -166,22 +185,37 @@ def merge_into_parquet_bucketed(
     the fully split tree. ``n_buckets`` must be a power of two and caps
     the fan-out.
 
-    Each batch row goes to the leaf that contains its h; a key in a
-    hole left by a fully deleted leaf goes to its deepest-level leaf,
-    which cannot overlap another. Only the touched leaves are read and
-    rewritten, and a touched leaf whose directory holds more than one
-    scan split (``spark.sql.files.maxPartitionBytes``) is rewritten
-    directly as its 2^k descendants, k = ceil(log2(bytes / split)),
-    capped at the deepest level — splitting costs no I/O beyond the
-    rewrite. Leaves thus stay about one split in size: a small mirror
-    is a single file per merge, and a large one rewrites only the
-    split-sized leaves its keys hash into. A 100 TB mirror needs
-    n_buckets near 100 TB / split (2^20 at 128 MB) for that; a large
-    cap costs a small mirror nothing.
+    Each batch key goes to the leaf that contains its h, or to the
+    shallowest empty subtree on h's path (a hole left by deleted
+    leaves). The merge reads and rewrites the largest subtrees that
+    hold no leaf the batch misses, so untouched leaves stay as they are
+    and a batch that touches every leaf of a subtree joins them. Each
+    rewritten subtree gets one depth, chosen from what the merge sees:
+    its bytes and the share of its would-be leaves the batch's keys
+    fall in. Leaves are kept at about one scan split at most
+    (``spark.sql.files.maxPartitionBytes``); beyond that the depth
+    minimises what a like batch would rewrite next time, counting each
+    file it writes at Spark's file-open cost
+    (``spark.sql.files.openCostInBytes``, 4 MB by default). Both are
+    read from the session. So a dense batch leaves a small mirror one
+    file, a batch whose keys all fall in one child splits its subtree
+    down to the cap, and a 10-key batch against a 1 MB mirror rewrites
+    the whole 1 MB, which costs less than the ~9 files it would write
+    next time otherwise. The fixed layout is one of the depths weighed,
+    so by this cost a merge never predicts worse than it; but a stream
+    that alternates one-key and dense batches splits and joins a small
+    mirror each time, rewriting all of it both ways. Routing tests each
+    key against the inner nodes of the tree, so its cost grows with the
+    leaf count; only caps up to 64 have been measured.
 
-    The merged leaves are written aside, then swapped in; a replaced
-    leaf is deleted only after its children are in place, and a layout
-    with overlapping leaves (a swap cut short) raises.
+    The merged leaves are written aside, then renamed in; a replaced
+    leaf is deleted only after every new leaf is in place. A merge cut
+    short there leaves old and new leaves overlapping: the next merge
+    reads each leaf together with the leaves inside it and rewrites
+    them as one subtree, so replaying the cut-short batch (as
+    foreachBatch does after a restart) restores the state through the
+    stored seq. Only the moment between removing a leaf and renaming its
+    same-named successor in is unprotected.
     """
     if n_buckets < 1 or n_buckets & (n_buckets - 1):
         raise ValueError(f"n_buckets must be a power of two, got {n_buckets}")
@@ -195,24 +229,56 @@ def merge_into_parquet_bucketed(
     # function of the key's value, not its physical type.
     h = F.xxhash64(*[F.col(c).cast("string") for c in key_cols])
 
+    def node_id(node: tuple[int, int]) -> int:
+        return node[1] + n_buckets * (top - node[0])
+
     def leaf_at(depth: int):
         return h.bitwiseAND(F.lit((1 << depth) - 1)) + F.lit(n_buckets * (top - depth))
 
     exists = os.path.exists(target_path)
     leaves = _leaf_layout(target_path, n_buckets) if exists else {}
-    if not leaves:
-        leaves = {n_buckets * top: 0}
-    depths = sorted(set(leaves.values()))
-    route = F.coalesce(
-        *[
-            F.when(leaf_at(d).isin([b for b, bd in leaves.items() if bd == d]), leaf_at(d))
-            for d in depths
-        ],
-        leaf_at(top),
-    )
-    batch_b = batch_df.withColumn("__bucket", route)
-    touched = [r["__bucket"] for r in batch_b.select("__bucket").distinct().collect()]
-    present = [b for b in touched if os.path.isdir(os.path.join(target_path, f"{_LEAF_DIR}{b}"))]
+    nodes = set(leaves.values())
+    outer = {c for c in nodes if not any(a in nodes for a in _ancestors(c))}
+    inner = {a for c in outer for a in _ancestors(c)}
+    # a key's route is the first node on its hash path that is no
+    # ancestor of a leaf
+    route = []
+    for d in range(top + 1):
+        ids = [node_id(a) for a in inner if a[0] == d]
+        if not ids:
+            route.append(leaf_at(d))
+            break
+        route.append(F.when(~leaf_at(d).isin(ids), leaf_at(d)))
+    batch_b = batch_df.withColumn("__bucket", F.coalesce(*route))
+    touched: dict[tuple[int, int], set[int]] = {}
+    for row in (
+        batch_b.select("__bucket", h.bitwiseAND(F.lit(n_buckets - 1)).alias("fine"))
+        .distinct()
+        .collect()
+    ):
+        b = row["__bucket"]
+        touched.setdefault((top - b // n_buckets, b % n_buckets), set()).add(row["fine"])
+    if not touched:  # an empty batch changes nothing
+        return
+    # each touched node is rewritten with the largest subtree around it
+    # that holds no untouched leaf
+    kept = {a for c in outer - touched.keys() for a in _ancestors(c) + [c]}
+    regions: dict[tuple[int, int], set[int]] = {}
+    for c, fine in touched.items():
+        root = next(a for a in _ancestors(c) + [c] if a not in kept)
+        regions.setdefault(root, set()).update(fine)
+
+    conf = spark._jsparkSession.sessionState().conf()
+    split, open_cost = conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes()
+    present: list[int] = []
+    groups: dict[tuple[int, int], list[int]] = {}
+    for root, fine in regions.items():
+        inside = [b for b, c in leaves.items() if _contains(root, c)]
+        present += inside
+        size = sum(_dir_bytes(os.path.join(target_path, f"{_LEAF_DIR}{b}")) for b in inside)
+        depth = _rewrite_depth(size, fine, root[0], top, split, open_cost)
+        groups.setdefault((root[0], depth), []).append(node_id(root))
+
     if present:
         state = spark.read.option("basePath", target_path).parquet(
             *[os.path.join(target_path, f"{_LEAF_DIR}{b}") for b in present]
@@ -223,19 +289,12 @@ def merge_into_parquet_bucketed(
     else:
         combined = batch_b
     merged = apply_changes(combined, key_cols, seq_col, op_col, delete_ops)
-
-    # a leaf of `size` bytes splits ceil(log2(size / split)) levels down
-    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    grown: dict[int, list[int]] = {}
-    for b in present:
-        size = _dir_bytes(os.path.join(target_path, f"{_LEAF_DIR}{b}"))
-        d = min(top, leaves[b] + ((size - 1) // split).bit_length())
-        if d > leaves[b]:
-            grown.setdefault(d, []).append(b)
-    out_leaf = F.col("__bucket")
-    for d, olds in grown.items():
-        out_leaf = F.when(F.col("__bucket").isin(olds), leaf_at(d)).otherwise(out_leaf)
-    merged = merged.withColumn("__bucket", out_leaf)
+    merged = merged.withColumn(
+        "__bucket",
+        F.coalesce(
+            *[F.when(leaf_at(rd).isin(ids), leaf_at(d)) for (rd, d), ids in groups.items()]
+        ),
+    )
 
     # Self-overwrite hazard: the merged plan reads the very files being
     # replaced. Write-aside distributed, then swap ONLY the touched
@@ -261,8 +320,8 @@ def merge_into_parquet_bucketed(
             shutil.rmtree(dst)
         os.rename(os.path.join(tmp, entry), dst)
         moved.add(entry)
-    # only now, with every child in place: drop each touched leaf that
-    # split or whose keys were all deleted
+    # only now, with every new leaf in place: drop each rewritten leaf
+    # that was not replaced in place
     for b in present:
         entry = f"{_LEAF_DIR}{b}"
         if entry not in moved:

@@ -1909,8 +1909,8 @@ def cdc_mirror_merge_replay(spark, sf_dir):
     the DIFF COUNT is part of the value hash (oracle says 0).
 
     Scale: the merge rewrites only the hash leaves its keys fall in,
-    each kept near one scan split (the MERGE file-pruning idea in plain
-    parquet); trajectory rows are bounded aggregates; replay is
+    each at most about one scan split (the MERGE file-pruning idea in
+    plain parquet); trajectory rows are bounded aggregates; replay is
     idempotent because state rows keep their seq (a re-delivered batch
     cannot regress newer state)."""
     import glob as _glob

@@ -53,14 +53,16 @@ class CDCConsumer:
     tables: dict[str, TableSpec] = field(default_factory=dict)
     #: >0 switches the mirror merge to the leaf-pruned path
     #: (cdc_apply.merge_into_parquet_bucketed) and caps its fan-out; a
-    #: power of two. A mirror starts as one hash leaf, and a merge
-    #: rewrites only the leaves its keys hash into, splitting any that
-    #: outgrew one scan split (spark.sql.files.maxPartitionBytes), so a
-    #: leaf stays about one split in size. A small mirror is therefore
-    #: one file per merge whatever the cap; at 64 a 100 TB mirror would
-    #: still rewrite ~1.5 TB per touched leaf, so large mirrors raise it
-    #: toward state / split (2^20 at 100 TB and 128 MB), which costs
-    #: small mirrors nothing. 0 opts into the single-directory
+    #: power of two. A mirror starts as one hash leaf; a merge rewrites
+    #: only the leaves its keys hash into, keeps each at most about one
+    #: scan split (spark.sql.files.maxPartitionBytes), splits them when
+    #: its keys fall in few of their would-be children and joins them
+    #: when it touches them all (the rule is in that function). So
+    #: dense epochs keep a small mirror at one file per table, and a
+    #: 10-key batch on a 1 MB mirror rewrites the whole 1 MB. At 64 a
+    #: 100 TB mirror still rewrites ~1.5 TB per touched leaf; one split
+    #: per leaf there needs a cap near 2^20, which is untested (routing
+    #: cost grows with the leaf count). 0 opts into the single-directory
     #: full-rewrite path.
     mirror_buckets: int = 64
     #: when set, unparseable records (null/malformed/op-less envelopes)

@@ -290,6 +290,11 @@ def test_bucketed_merge_fresh_mirror_is_one_leaf(spark, tmp_path):
     # the root leaf of a 64-bucket tree: residue 0 at depth 0 = 0 + 64 * 6
     assert _check_layout(spark, target) == {384: 0}
     assert _state(spark, target) == _expected(spark, rows)
+    before = _leaf_files(target)
+    cdc_apply.merge_into_parquet_bucketed(
+        spark, target, spark.createDataFrame([], _MIRROR_SCHEMA), ["pk"]
+    )
+    assert _leaf_files(target) == before
 
 
 def _epochs():
@@ -344,29 +349,67 @@ def _split_target(spark, target):
     return batches[0] + batches[1]
 
 
+def _fixed_layout(spark, target, rows):
+    """Write ``rows`` in the fixed pmod(h, 64) bucket layout."""
+    (
+        spark.createDataFrame(rows, _MIRROR_SCHEMA)
+        .withColumn("__bucket", F.expr("pmod(xxhash64(cast(pk AS STRING)), 64)"))
+        .write.partitionBy("__bucket")
+        .parquet(target)
+    )
+
+
+def _home(spark, leaves, pk):
+    """The leaf id that holds key ``pk``."""
+    (h,) = spark.range(1).select(F.expr(f"xxhash64(cast({pk}L AS STRING))")).first()
+    return next(b for b, d in leaves.items() if h & ((1 << d) - 1) == b % 64)
+
+
 def test_bucketed_merge_one_key_rewrites_only_its_leaf(spark, tmp_path):
+    """A one-key batch leaves every other leaf as it is, and splits its
+    own leaf down to the cap, so the next one-key batch there rewrites
+    a 64th of the state."""
     target = str(tmp_path / "state")
     log = _split_target(spark, target)
     leaves = _check_layout(spark, target)
     assert len(leaves) > 1
+    home = _home(spark, leaves, 3)
     before = _leaf_files(target)
     batch = [(3, "v3b", 10_000, "u")]
     cdc_apply.merge_into_parquet_bucketed(
         spark, target, spark.createDataFrame(batch, _MIRROR_SCHEMA), ["pk"]
     )
     after = _leaf_files(target)
+    now = _check_layout(spark, target)
+    assert all(after[d] == f for d, f in before.items() if d != f"__bucket={home}")
+    assert f"__bucket={home}" not in after
+    new = {b: d for b, d in now.items() if b not in leaves}
+    assert new and set(new.values()) == {6}
+    assert all(b % (1 << leaves[home]) == home % 64 for b in new)
+    log += batch
+    assert _state(spark, target) == _expected(spark, log)
+
+    other = next(
+        r.pk
+        for r in spark.read.parquet(target).filter(f"__bucket IN ({','.join(map(str, new))})")
+        .collect()
+        if r.pk != 3
+    )
+    before = after
+    batch = [(other, "again", 10_001, "u")]
+    cdc_apply.merge_into_parquet_bucketed(
+        spark, target, spark.createDataFrame(batch, _MIRROR_SCHEMA), ["pk"]
+    )
+    after = _leaf_files(target)
     assert after.keys() == before.keys()
-    changed = [d for d in after if after[d] != before[d]]
-    assert len(changed) == 1, changed
-    (h,) = spark.range(1).select(F.expr("xxhash64(cast(3L AS STRING))")).first()
-    b = int(changed[0].split("=")[1])
-    assert h & ((1 << leaves[b]) - 1) == b % 64
+    assert [d for d in after if after[d] != before[d]] == [f"__bucket={_home(spark, now, other)}"]
     assert _state(spark, target) == _expected(spark, log + batch)
 
 
 def test_bucketed_merge_drops_fully_deleted_leaf(spark, tmp_path):
     """Deleting every key of a leaf removes its directory; a key later
-    inserted into that hole lands in a deepest-level leaf."""
+    inserted into that hole lands in the shallowest empty subtree on its
+    hash path, the deleted leaf's own node."""
     target = str(tmp_path / "state")
     log = _split_target(spark, target)
     leaves = _check_layout(spark, target)
@@ -387,22 +430,17 @@ def test_bucketed_merge_drops_fully_deleted_leaf(spark, tmp_path):
     cdc_apply.merge_into_parquet_bucketed(
         spark, target, spark.createDataFrame(batch, _MIRROR_SCHEMA), ["pk"]
     )
-    new = set(_check_layout(spark, target).items()) - set(leaves.items())
-    assert len(new) == 1 and next(iter(new))[1] == 6
+    assert _check_layout(spark, target) == leaves
     assert _state(spark, target) == _expected(spark, log + batch)
 
 
 def test_bucketed_merge_continues_fixed_layout(spark, tmp_path):
     """A mirror written in the fixed pmod(h, 64) layout is the fully
-    split tree: it keeps merging in place."""
+    split tree: it keeps merging in place, and leaves the batch misses
+    keep their files."""
     target = str(tmp_path / "state")
     rows = [(i, f"v{i}", i, "c") for i in range(500)]
-    (
-        spark.createDataFrame(rows, _MIRROR_SCHEMA)
-        .withColumn("__bucket", F.expr("pmod(xxhash64(cast(pk AS STRING)), 64)"))
-        .write.partitionBy("__bucket")
-        .parquet(target)
-    )
+    _fixed_layout(spark, target, rows)
     before = _leaf_files(target)
     assert len(before) == 64
     batch = (
@@ -410,12 +448,33 @@ def test_bucketed_merge_continues_fixed_layout(spark, tmp_path):
         + [(i, None, 2000 + i, "d") for i in range(1, 40, 2)]
         + [(i, f"n{i}", 3000 + i, "c") for i in range(500, 520)]
     )
+    hit = {
+        f"__bucket={r.b}"
+        for r in spark.createDataFrame(batch, _MIRROR_SCHEMA)
+        .select(F.expr("pmod(xxhash64(cast(pk AS STRING)), 64)").alias("b"))
+        .collect()
+    }
+    assert len(hit) < 64
     cdc_apply.merge_into_parquet_bucketed(
         spark, target, spark.createDataFrame(batch, _MIRROR_SCHEMA), ["pk"]
     )
-    leaves = _check_layout(spark, target)
-    assert set(leaves.values()) == {6} and len(leaves) == 64
-    assert sum(_leaf_files(target)[d] == before[d] for d in before) > 0
+    _check_layout(spark, target)
+    after = _leaf_files(target)
+    assert all(after[d] == f for d, f in before.items() if d not in hit)
+    assert _state(spark, target) == _expected(spark, rows + batch)
+
+
+def test_bucketed_merge_dense_batch_joins_leaves(spark, tmp_path):
+    """A batch that touches every leaf of a fixed-layout mirror rewrites
+    it as one root leaf."""
+    target = str(tmp_path / "state")
+    rows = [(i, f"v{i}", i, "c") for i in range(500)]
+    _fixed_layout(spark, target, rows)
+    batch = [(i, f"u{i}", 1000 + i, "u") for i in range(500)]
+    cdc_apply.merge_into_parquet_bucketed(
+        spark, target, spark.createDataFrame(batch, _MIRROR_SCHEMA), ["pk"]
+    )
+    assert _check_layout(spark, target) == {384: 0}
     assert _state(spark, target) == _expected(spark, rows + batch)
 
 
@@ -427,20 +486,69 @@ def test_bucketed_merge_rejects_non_power_of_two(spark, tmp_path):
         )
 
 
-def test_bucketed_merge_rejects_overlapping_leaves(spark, tmp_path):
-    """A root leaf next to one of its descendants (a swap cut short)
-    is refused rather than merged into duplicate state."""
+class _Cut(Exception):
+    """Stands for a crash in the middle of a merge's swap."""
+
+
+@contextlib.contextmanager
+def _swap_cut_after(target, n):
+    """Within the block, the n+1-th rename into or removal inside
+    ``target`` raises _Cut before it happens."""
+    import shutil
+
+    steps = []
+    rename, rmtree = os.rename, shutil.rmtree
+
+    def step(path):
+        if os.path.dirname(path) == target:
+            if len(steps) == n:
+                raise _Cut(path)
+            steps.append(path)
+
+    def cut_rename(src, dst):
+        step(dst)
+        rename(src, dst)
+
+    def cut_rmtree(path, *args, **kwargs):
+        step(path)
+        rmtree(path, *args, **kwargs)
+
+    os.rename, shutil.rmtree = cut_rename, cut_rmtree
+    try:
+        yield
+    finally:
+        os.rename, shutil.rmtree = rename, rmtree
+
+
+@pytest.mark.parametrize("swap", ["split", "join"])
+def test_bucketed_merge_replay_repairs_cut_short_swap(spark, tmp_path, swap):
+    """A merge cut short after its first new leaves are renamed in
+    leaves them next to the leaves they replace, so keys show twice.
+    Replaying the same batch merges each leaf with the leaves inside it
+    and restores the state of a one-shot apply_changes."""
     target = str(tmp_path / "state")
-    (
-        spark.createDataFrame(
-            [(1, "a", 1, "c", 384), (2, "b", 2, "c", 5)], _MIRROR_SCHEMA + ", __bucket INT"
-        )
-        .write.partitionBy("__bucket")
-        .parquet(target)
-    )
-    batch = spark.createDataFrame([(3, "c", 3, "c")], _MIRROR_SCHEMA)
-    with pytest.raises(ValueError, match="overlapping leaves"):
-        cdc_apply.merge_into_parquet_bucketed(spark, target, batch, ["pk"])
+    split = 4096 if swap == "split" else 128 * 1024 * 1024
+    with _split_bytes(spark, split):
+        if swap == "split":
+            first, batch = _epochs()[:2]
+            cdc_apply.merge_into_parquet_bucketed(
+                spark, target, spark.createDataFrame(first, _MIRROR_SCHEMA), ["pk"]
+            )
+        else:
+            first = [(i, f"v{i}", i, "c") for i in range(500)]
+            _fixed_layout(spark, target, first)
+            batch = [(i, None if i % 5 == 0 else f"u{i}", 1000 + i, "d" if i % 5 == 0 else "u")
+                     for i in range(500)]
+        expected = _expected(spark, first + batch)
+        df = spark.createDataFrame(batch, _MIRROR_SCHEMA)
+        with pytest.raises(_Cut), _swap_cut_after(target, 2 if swap == "split" else 1):
+            cdc_apply.merge_into_parquet_bucketed(spark, target, df, ["pk"])
+        cut = _state(spark, target)
+        assert len(cut) > len({r[0] for r in cut})
+        cdc_apply.merge_into_parquet_bucketed(spark, target, df, ["pk"])
+    leaves = _check_layout(spark, target)
+    assert (min(leaves.values()) > 0) if swap == "split" else (leaves == {384: 0})
+    assert _state(spark, target) == expected
 
 
 def test_merge_sql_statement_shape():
